@@ -1102,99 +1102,33 @@ def minhash_store(
     )
 
 
+def store_frames(
+    store: DataFrame, persist_handle: list | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """docs(id, fp, minhash), keys(id, bk), counts(bk, n) of a
+    ``minhash_store`` frame, all reading ONE cache filled eagerly: the
+    hashing runs once, before any consumer exists, so no consumer races
+    a lazy cache fill or re-hashes the corpus text (a lost block is
+    recomputed from lineage). Pass ``persist_handle=[]`` to free the
+    cache deterministically."""
+    m = store.persist()
+    if persist_handle is not None:
+        persist_handle.append(m)
+    m.count()
+    keys = m.select("id", F.explode("bks").alias("bk"))
+    return (
+        m.select("id", "fp", "minhash"),
+        keys,
+        keys.groupBy("bk").agg(F.count(F.lit(1)).alias("n")),
+    )
+
+
 def _sig_equal_components(a: Column, b: Column) -> Column:
     """# of positions where two minhash signatures agree — the standard
     Jaccard estimator (E[equal/num_hashes] = J) used when original
     shingles are cold storage."""
     return F.size(
         F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda z: z)
-    )
-
-
-def incremental_dedup_keep_ids(
-    new_docs: DataFrame,
-    corpus_store: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-    min_equal: int = MINHASH_EST_MIN_EQUAL,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    persist_handle: list | None = None,
-    candidates_only: bool = False,
-) -> DataFrame:
-    """Kept NEW doc ids after dedup against (a) the corpus store and
-    (b) the new batch itself.
-
-    1. exact: a new doc whose normalized fingerprint exists in the
-       corpus is dropped (anti-join on the 16-byte fp); within the
-       batch the smallest id per fingerprint survives;
-    2. near-dup: band-key candidates against corpus + batch stores
-       (windowed hot-bucket cap over the COMBINED bucket population),
-       verified by signature agreement ≥ min_equal components — new
-       ids matching any corpus doc, or a smaller surviving new id, are
-       dropped. Deterministic and replay-stable.
-    """
-    # both stores feed MULTIPLE lazy branches (fp distinct, explode of
-    # the expensive bks array, signature joins) — the explode would
-    # splice the seeded-md5 transforms into each consumer without the
-    # cache barriers (the lsh_candidate_pairs rule)
-    ns = minhash_store(new_docs, id_col, text_col, num_hashes, bands, shingle_n).persist()
-    corpus_store = corpus_store.persist()
-    if persist_handle is not None:
-        persist_handle.extend([ns, corpus_store])
-    # 1) exact
-    from pyspark.sql import Window
-
-    in_corpus = corpus_store.select("fp").distinct()
-    w = Window.partitionBy("fp").orderBy("id")
-    survivors = (
-        ns.join(in_corpus, "fp", "left_anti")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    ).persist()  # four consumers: nb, two signature joins, final anti-join
-    if persist_handle is not None:
-        persist_handle.append(survivors)
-    # 2) near-dup candidates over band keys (corpus ∪ surviving new)
-    nb = survivors.select(F.col("id"), F.explode("bks").alias("bk")).withColumn(
-        "src", F.lit("new")
-    )
-    cb = corpus_store.select(F.col("id"), F.explode("bks").alias("bk")).withColumn(
-        "src", F.lit("corpus")
-    )
-    keyed = _cap_hot_buckets(nb.unionByName(cb), "bk", max_bucket)
-    new_side = keyed.filter(F.col("src") == "new").select(
-        "bk", F.col("id").alias("id_new")
-    )
-    other = keyed.select("bk", F.col("id").alias("id_other"), "src")
-    cand = (
-        new_side.join(other, "bk")
-        .filter(
-            (F.col("src") == "corpus")
-            | (F.col("id_other") < F.col("id_new"))  # smaller NEW id wins
-        )
-        .select("id_new", "id_other", "src")
-        .dropDuplicates(["id_new", "id_other", "src"])
-    )
-    if candidates_only:
-        return cand
-    sig_new = survivors.select(F.col("id").alias("id_new"), F.col("minhash").alias("mh_new"))
-    sig_corpus = corpus_store.select(F.col("id").alias("id_other"), F.col("minhash").alias("mh_other"))
-    sig_newb = survivors.select(F.col("id").alias("id_other"), F.col("minhash").alias("mh_other"))
-    cand_c = cand.filter(F.col("src") == "corpus").join(sig_corpus, "id_other")
-    cand_n = cand.filter(F.col("src") == "new").join(sig_newb, "id_other")
-    verified = (
-        cand_c.unionByName(cand_n)
-        .join(sig_new, "id_new")
-        .filter(
-            _sig_equal_components(F.col("mh_new"), F.col("mh_other")) >= min_equal
-        )
-    )
-    drops = verified.select(F.col("id_new").alias("id")).distinct()
-    return survivors.join(drops, "id", "left_anti").select(
-        F.col("id").alias(id_col)
     )
 
 
@@ -1272,9 +1206,9 @@ def write_minhash_store(
     n_buckets: int = 16,
 ) -> None:
     """Persist the dedup state as BUCKETED tables — the production
-    layout the in-memory ``corpus_store.persist()`` stood in for
-    (VERDICT r3 audit note: at 10⁹-doc corpora the persist is the
-    first thing to fall over). On a real deployment these are Iceberg
+    layout of the three relations ``store_frames`` holds in executor
+    memory (at 10⁹-doc corpora an in-memory store is the first thing
+    to fall over). On a real deployment these are Iceberg
     tables with bucket partition transforms; the session-catalog
     saveAsTable is the sandbox analog (same rule as
     sources/tables.write_bucketed).
@@ -1305,39 +1239,42 @@ def write_minhash_store(
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"{warehouse}/{t.lower()}", ignore_errors=True)
 
-    store = minhash_store(
-        df, id_col, text_col, num_hashes, bands, shingle_n
-    ).persist()  # two writes + the counts agg consume it
-    write_bucketed(
-        store.select("id", "fp", "minhash"),
-        f"{name}_docs",
-        bucket_cols=("id",),
-        sort_cols=("id",),
-        n_buckets=n_buckets,
+    handle: list = []
+    docs, keys, counts = store_frames(
+        minhash_store(df, id_col, text_col, num_hashes, bands, shingle_n), handle
     )
-    keys = store.select("id", F.explode("bks").alias("bk"))
-    write_bucketed(
-        keys,
-        f"{name}_keys",
-        bucket_cols=("bk",),
-        sort_cols=("bk", "id"),
-        n_buckets=n_buckets,
-    )
-    (
-        spark.table(f"{name}_keys")
-        .groupBy("bk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{name}_counts")
-    )
-    store.unpersist()
+    try:
+        write_bucketed(
+            docs,
+            f"{name}_docs",
+            bucket_cols=("id",),
+            sort_cols=("id",),
+            n_buckets=n_buckets,
+        )
+        write_bucketed(
+            keys,
+            f"{name}_keys",
+            bucket_cols=("bk",),
+            sort_cols=("bk", "id"),
+            n_buckets=n_buckets,
+        )
+        counts.write.mode("overwrite").format("parquet").saveAsTable(f"{name}_counts")
+    finally:
+        for frame in handle:
+            frame.unpersist()
 
 
-def incremental_dedup_keep_ids_bucketed(
-    spark,
+def read_minhash_store(spark, name: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The (docs, keys, counts) relations of a write_minhash_store
+    layout, as ``incremental_dedup_keep_ids`` takes them."""
+    return tuple(spark.table(f"{name}{s}") for s in ("_docs", "_keys", "_counts"))
+
+
+def incremental_dedup_keep_ids(
     new_docs: DataFrame,
-    store_name: str,
+    docs: DataFrame,
+    keys: DataFrame,
+    counts: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
@@ -1346,28 +1283,31 @@ def incremental_dedup_keep_ids_bucketed(
     min_equal: int = MINHASH_EST_MIN_EQUAL,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     persist_handle: list | None = None,
+    candidates_only: bool = False,
 ) -> DataFrame:
-    """incremental_dedup_keep_ids against a write_minhash_store layout.
+    """Kept NEW doc ids after dedup against (a) the corpus store —
+    ``read_minhash_store`` (bucketed tables) or ``store_frames`` (in
+    memory) — and (b) the new batch itself.
 
-    Result-identical to the in-memory variant (pinned by test), but the
-    corpus is never persisted in executor memory and never reshuffled:
-    - exact anti-join reads only the ``fp`` column of ``{name}_docs``;
-    - the hot-bucket cap joins new-side bucket counts with the stored
-      ``{name}_counts`` occupancy (combined population, same semantics
-      as the window over the union) and broadcasts the tiny over-cap
-      key set — the corpus keys scan keeps its bucketing;
-    - the candidate join and both signature joins land on the bucketed
-      tables' own partitioning (plan pinned Exchange-free on the
-      corpus side in tests/test_dedup_store.py).
+    1. exact: a new doc whose normalized fingerprint exists in the
+       corpus is dropped (anti-join on the ``fp`` column of docs);
+       within the batch the smallest id per fingerprint survives;
+    2. near-dup: band-key candidates against corpus keys + batch keys,
+       verified by signature agreement ≥ min_equal components — new
+       ids matching any corpus doc, or a smaller surviving new id, are
+       dropped. Deterministic and replay-stable.
 
-    Only the INCREMENT (new batch) is persisted — at production scale
-    that is the day's arrivals, not the corpus.
+    The hot-bucket cap counts the COMBINED corpus+increment population:
+    new-side bucket counts plus the stored ``counts`` occupancy, then
+    the tiny over-cap key set is broadcast — the corpus keys keep their
+    layout, and on the bucketed tables the candidate and signature
+    joins are Exchange-free on the corpus side (plan pinned in
+    tests/test_dedup_store.py). Only the INCREMENT is persisted.
+    ``candidates_only=True`` returns the pre-verification candidate
+    frame (id_new, id_other, src).
     """
     from pyspark.sql import Window
 
-    docs = spark.table(f"{store_name}_docs")
-    keys = spark.table(f"{store_name}_keys")
-    counts = spark.table(f"{store_name}_counts")
     ns = minhash_store(new_docs, id_col, text_col, num_hashes, bands, shingle_n).persist()
     if persist_handle is not None:
         persist_handle.append(ns)
@@ -1406,6 +1346,8 @@ def incremental_dedup_keep_ids_bucketed(
         .withColumn("src", F.lit("new"))
     )
     cand = cand_c.unionByName(cand_n).dropDuplicates(["id_new", "id_other", "src"])
+    if candidates_only:
+        return cand
     sig_new = survivors.select(F.col("id").alias("id_new"), F.col("minhash").alias("mh_new"))
     sig_corpus = docs.select(F.col("id").alias("id_other"), F.col("minhash").alias("mh_other"))
     sig_newb = survivors.select(F.col("id").alias("id_other"), F.col("minhash").alias("mh_other"))
@@ -1454,23 +1396,11 @@ class LocalCheckpointHandle:
         _free_local_checkpoint(self._df, blocking)
 
 
-def _free_checkpoints(*frames: DataFrame | None) -> None:
-    """Error-path cleanup shared by the iterative components variants:
-    free each distinct non-None checkpoint frame exactly once (loop
-    frames alias each other after reassignment — the identity dedup
-    prevents a double free)."""
-    seen: list[DataFrame] = []
-    for f in frames:
-        if f is not None and not any(f is s for s in seen):
-            seen.append(f)
-            _free_local_checkpoint(f)
-
-
 def neardup_components(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iters: int = 20,
+    max_iters: int = 30,
     persist_handle: list | None = None,
     stats_handle: dict | None = None,
 ) -> DataFrame:
@@ -1482,154 +1412,37 @@ def neardup_components(
     actually wants — A~B, B~C must collapse A,B,C to ONE survivor even
     when (A,C) was never emitted as a pair.
 
-    Spark-first: iterative min-label propagation — per round, each
-    node takes the min of its own label and its neighbors' labels
-    (join + agg on the edge list), converging in O(component diameter)
-    rounds (near-dup clusters are shallow; max_iters bounds
-    pathological chains). One bounded action per round (the converged?
-    count). Scale: every round is edge-list-sized joins/aggs — no
-    global structure, shuffle keyed on node id.
-
-    Each round's labels are eager-localCheckpoint'ed: the new-labels
-    plan references the previous round TWICE (neighbor join + carry
-    join), so without lineage truncation the logical plan doubles per
-    round and the driver OOMs building plan trees near max_iters
-    (observed at 20 rounds). Intermediate round blocks are reclaimed
-    by the ContextCleaner when dereferenced (the lsh_candidate_pairs
-    convention); on a real cluster set a reliable checkpoint dir if
-    executor loss during the handful of rounds is a concern.
-    """
-    ids = df.select(F.col(id_col).alias("id")).distinct()
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = ids.withColumn("comp", F.col("id")).localCheckpoint()
-
-    def _label_sum(frame: DataFrame):
-        # exact decimal sum — ids are non-negative longs, so Σcomp fits
-        # decimal(38,0) at any corpus size where ids fit a long at all
-        return frame.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    rounds = 0
-    new_labels = None
-    try:
-        for rounds in range(1, max_iters + 1):
-            neigh = (
-                edges.join(labels.withColumnRenamed("id", "v"), "v")
-                .groupBy("u")
-                .agg(F.min("comp").alias("neigh_comp"))
-                .withColumnRenamed("u", "id")
-            )
-            # eager localCheckpoint: materializes AND truncates lineage
-            # (see docstring — the plan doubles per round otherwise)
-            new_labels = (
-                labels.join(neigh, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("neigh_comp"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .localCheckpoint()
-            )
-            # convergence via the label-sum invariant (r7): comp is
-            # least(old, neighbors) per round, so labels are monotone
-            # non-increasing and ANY change strictly decreases Σcomp —
-            # changed == 0 ⟺ Σcomp unchanged. One map-side-combined agg
-            # over the checkpointed frame replaces the r6 per-round
-            # new-vs-old join + filter + count (one shuffle per round
-            # on the O(log-diameter) critical path).
-            new_sum = _label_sum(new_labels)
-            changed = new_sum != prev_sum
-            prev_sum = new_sum
-            # superseded round's checkpoint blocks: freed NOW (new_labels
-            # is eager-materialized), not whenever the ContextCleaner gets
-            # to them — repeated invocations must not accumulate storage
-            _free_local_checkpoint(labels)
-            labels = new_labels
-            if not changed:
-                converged = True
-                break
-        if not converged:
-            # returning fragmented labels would silently split true
-            # components (duplicates survive dedup, oracle mismatches
-            # with no hint) — a >max_iters-diameter chain must be loud
-            raise RuntimeError(
-                f"neardup_components did not converge in {max_iters} "
-                "rounds (component diameter exceeds max_iters)"
-            )
-        if stats_handle is not None:
-            # O(component-diameter) evidence for the scale-growth
-            # harness: rounds-to-convergence at two corpus scales
-            stats_handle["rounds"] = rounds
-        if persist_handle is not None:
-            # the final labels ARE a checkpoint — DataFrame.unpersist()
-            # would be a no-op, so hand the caller a handle that frees
-            # the checkpoint RDD itself
-            persist_handle.append(LocalCheckpointHandle(labels))
-        # else: the returned blocks are reclaimed by the ContextCleaner
-        # when the frame is GC'd (the lsh_candidate_pairs convention)
-        return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component_id"))
-    except BaseException:
-        # error path (non-convergence, mid-round failure): free the live
-        # label checkpoints — clearCache() cannot, and continue-on-error
-        # callers never receive a handle to clean (mirrors the star
-        # variant's error path)
-        _free_checkpoints(labels, new_labels)
-        raise
-    finally:
-        edges.unpersist()
-
-
-def neardup_components_star(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 30,
-    persist_handle: list | None = None,
-    stats_handle: dict | None = None,
-) -> DataFrame:
-    """Connected components via the two-phase star algorithm
-    (alternating large-star / small-star; Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014): O(log n) rounds
-    regardless of component DIAMETER, where min-label propagation
-    (`neardup_components`) pays O(diameter) rounds.
-
-    Per round, over the current edge set E (kept oriented big→small
-    after the first half-step):
+    Two-phase star algorithm (alternating large-star / small-star;
+    Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014): O(log n) rounds regardless of component DIAMETER —
+    a 64-node chain converges in ~6 rounds. Per round, over the
+    current edge set E (kept oriented big→small after the first
+    half-step):
 
       large-star  ∀u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
       small-star  ∀u over edges (u, v<u): m = min(Γ<(u)); emit (u, m)
                   and (v, m) for the other small neighbors v ≠ m
 
-    Both halves are edge-list-sized groupBy+join+distinct — no global
-    structure, same shuffle-on-node-id scale shape as propagation.
-    The fixed point is a star forest: every non-min node holds exactly
-    the edge (node, component-min). Convergence is checked exactly
-    (edge-set equality via count + one-sided subtract), one bounded
-    action pair per round.
+    Both halves are edge-list-sized window+distinct — no global
+    structure, shuffle keyed on node id. The fixed point is a star
+    forest: every non-min node holds exactly the edge (node,
+    component-min). Convergence is checked exactly (edge-set equality
+    via count + one-sided subtract), one bounded action pair per round;
+    the round count lands in ``stats_handle["rounds"]``. A graph that
+    has not converged after ``max_iters`` rounds raises — fragmented
+    labels would silently split true components.
 
     Each round ends in an eager localCheckpoint: `small` references
-    `large` three times and `large` the symmetric view twice, so the
-    un-truncated logical plan grows ~12× per round — exponential —
-    and the driver OOMs building plan trees by round ~6. Lineage
+    `with_min` twice and the symmetric view the edge set twice, so the
+    un-truncated logical plan grows ~4× per round — exponential — and
+    the driver OOMs building plan trees within a few rounds. Lineage
     truncation per round is mandatory for ANY iterative edge-rewrite
-    on Spark; intermediate blocks are ContextCleaner-reclaimed.
-
-    Same output contract as `neardup_components` (result-identity
-    pinned in tests/test_dedup.py); use THIS variant when components
-    may be deep — a 64-node chain converges in ~6 rounds here vs 63
-    propagation rounds.
+    on Spark; intermediate blocks are freed as each round supersedes
+    them. On a real cluster set a reliable checkpoint dir if executor
+    loss during the handful of rounds is a concern.
     """
+    from pyspark.sql import Window
+
     ids = df.select(F.col(id_col).alias("id")).distinct()
     # orient big→small up front (drop self-edges defensively): both
     # half-steps below preserve the u > v orientation
@@ -1642,6 +1455,9 @@ def neardup_components_star(
         .distinct()
         .localCheckpoint()
     )
+    # per-node minima as windows, not groupBy + join back: one shuffle
+    # by u per half-step instead of two
+    by_u = Window.partitionBy("u")
     converged = False
     rounds = 0
     small = None
@@ -1655,22 +1471,14 @@ def neardup_components_star(
             sym = edges.unionByName(
                 edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
-            lmin = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mn"))
-                .select("u", F.least("mn", "u").alias("m"))
-            )
             large = (
-                sym.join(lmin, "u")
+                sym.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
                 .filter(F.col("v") > F.col("u"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
             )
             # ---- small-star over big→small edges (large's output
             # already satisfies u > v: emitted (v, m) has m ≤ u < v)
-            smin = large.groupBy("u").agg(F.min("v").alias("m"))
-            with_min = large.join(smin, "u")
+            with_min = large.withColumn("m", F.min("v").over(by_u))
             small = (
                 with_min.select("u", F.col("m").alias("v"))
                 .unionByName(
@@ -1695,33 +1503,30 @@ def neardup_components_star(
                 break
         if not converged:
             raise RuntimeError(
-                f"neardup_components_star did not converge in {max_iters} "
+                f"neardup_components did not converge in {max_iters} "
                 "rounds (expected O(log n) — investigate the pair graph)"
             )
         if stats_handle is not None:
             stats_handle["rounds"] = rounds
         # star forest: non-min nodes carry exactly (id, component-min);
-        # min nodes and isolated docs label themselves
+        # min nodes and isolated docs label themselves. Checkpointed so
+        # the labels are a self-contained stage input: they outlive the
+        # final edge checkpoint (freed here) and any cache on `df`
+        # (component_labels callers reuse them across queries)
         labels = (
             ids.join(edges.withColumnRenamed("u", "id"), "id", "left")
             .groupBy("id")
             .agg(F.min("v").alias("mn"))
             .select("id", F.coalesce("mn", "id").alias("comp"))
+            .localCheckpoint()
         )
+        _free_local_checkpoint(edges)
         if persist_handle is not None:
-            # labels' lineage reads the final edges checkpoint;
-            # materialize the cache BEFORE handing out the
-            # checkpoint-freeing handle so cleanup order (handle
-            # iteration) can never strand the cache against freed
-            # checkpoint blocks
-            labels = labels.persist()
-            try:
-                labels.count()
-            except BaseException:
-                labels.unpersist()
-                raise
-            persist_handle.append(LocalCheckpointHandle(edges))
-            persist_handle.append(labels)
+            # DataFrame.unpersist() is a no-op on a checkpoint — hand
+            # the caller a handle that frees the checkpoint RDD itself
+            persist_handle.append(LocalCheckpointHandle(labels))
+        # else: the label blocks are reclaimed by the ContextCleaner
+        # when the frame is GC'd (the lsh_candidate_pairs convention)
         return labels.select(
             F.col("id").alias(id_col), F.col("comp").alias("component_id")
         )
@@ -1730,8 +1535,10 @@ def neardup_components_star(
         # label build): the live edge checkpoints would otherwise stay
         # pinned for the session — clearCache() cannot free checkpoint
         # blocks, and bench-style continue-on-error callers never see a
-        # handle to clean
-        _free_checkpoints(edges, small)
+        # handle to clean (freeing an aliased frame twice is a no-op)
+        for f in (edges, small):
+            if f is not None:
+                _free_local_checkpoint(f)
         raise
 
 

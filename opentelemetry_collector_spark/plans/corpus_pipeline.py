@@ -92,7 +92,7 @@ def clean_corpus(
 
     ``labels`` — precomputed ``component_labels`` output (doc_id,
     component_id over the SAME pre-filter parameters); when given, the
-    call is fully lazy (no label-propagation actions re-paid).
+    call is fully lazy (no per-round component actions re-paid).
     ``persist_handle=[]`` receives every persisted intermediate so
     callers (bench, CLI) unpersist deterministically instead of
     leaving caches to the ContextCleaner (r4 advice)."""

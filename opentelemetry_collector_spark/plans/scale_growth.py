@@ -39,9 +39,6 @@ GENERATORS = (
     "dedup_incremental",
     # r5 (VERDICT r4 #6): the two previously-absent generators
     "neardup_components",
-    # r5 late: the O(log n) two-phase star variant — its ROUNDS at two
-    # scales are the evidence for the depth-independence claim
-    "neardup_components_star",
     "ann_ivf_probe",
 )
 
@@ -166,34 +163,29 @@ def build(
         )
     if name == "dedup_incremental":
         docs = _docs(spark, fx_dir)
-        store = dedup.minhash_store(docs.filter(F.col("doc_id") % 5 != 0))
+        store = dedup.store_frames(
+            dedup.minhash_store(docs.filter(F.col("doc_id") % 5 != 0))
+        )
         return dedup.incremental_dedup_keep_ids(
             docs.filter(F.col("doc_id") % 5 == 0),
-            store,
+            *store,
             candidates_only=candidates_only,
         )
-    if name in ("neardup_components", "neardup_components_star"):
-        # ONE branch for both variants — the star gate asserts they see
-        # the identical pair graph, so the setup must be shared by
-        # construction. candidates = the DIRECTED verified pair list
-        # (id_a < id_b — the variants symmetrize internally, doubling
-        # it); full = the label frame; rounds-to-converge land in
-        # `stats` (the
-        # O(diameter) vs O(log n) claims need round counts at both
-        # scales, not just wall time). `handle` receives the label
-        # checkpoints: clearCache() between generators cannot free
-        # checkpoint blocks, so measure() cleans them explicitly or
-        # later generators absorb the storage pressure.
+    if name == "neardup_components":
+        # candidates = the DIRECTED verified pair list (id_a < id_b —
+        # the algorithm symmetrizes internally, doubling it); full = the
+        # label frame; rounds-to-converge land in `stats` (the O(log n)
+        # claim needs round counts at both scales, not just wall time).
+        # `handle` receives the label checkpoint: clearCache() between
+        # generators cannot free checkpoint blocks, so measure() cleans
+        # it explicitly or later generators absorb the storage pressure.
         docs = _docs(spark, fx_dir)
         pairs = dedup.neardup_pairs_minhash(docs, threshold=0.5)
         if candidates_only:
             return pairs
-        fn = (
-            dedup.neardup_components
-            if name == "neardup_components"
-            else dedup.neardup_components_star
+        return dedup.neardup_components(
+            docs, pairs, stats_handle=stats, persist_handle=handle
         )
-        return fn(docs, pairs, stats_handle=stats, persist_handle=handle)
     if name == "ann_ivf_probe":
         # candidates = vectors inside the probed cells (the probe's
         # scan volume — the quantity that must stay ~n·probes/cells);

@@ -12,8 +12,63 @@ reading ~100 TB and merely *tested* on local[32]:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# local, local[N], local[*], local[N,F], local[*,F]
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+
+
+def local_conf(master: str) -> dict[str, str]:
+    """The settings only a local master gets ({} for a cluster master,
+    which keeps Spark's stock defaults — there files are many and
+    large and the 128 MB split is right)."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
+        return {}
+    threads = m.group(1) or "1"
+    parallelism = (os.cpu_count() or 1) if threads == "*" else int(threads)
+    conf = {
+        # local files are small: keep scan splits ≤16 MB so map-side
+        # parallelism matches the core count
+        "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
+        # the 16 MB cap alone still left the sf0.1
+        # transcript scan at 6 map tasks on a 32-core box (measured:
+        # the logs-envelope map stage burned 12 s of CPU across 6 tasks
+        # = 2 s wall with 26 cores idle). Scale-adaptively derive split
+        # size from input-size/parallelism instead of a constant:
+        # minPartitionNum floors scan parallelism at 2× the core count
+        # and openCostInBytes must drop below the default 4 MB or it
+        # re-floors every split at 4 MB.
+        "spark.sql.files.minPartitionNum": os.environ.get(
+            "SPARK_MIN_PARTITION_NUM", str(2 * parallelism)
+        ),
+        "spark.sql.files.openCostInBytes": os.environ.get(
+            "SPARK_OPEN_COST_BYTES", str(1024 * 1024)
+        ),
+        # AQE coalescing is byte-based; CPU-dense stages over narrow
+        # rows (134k candidate pairs × 64-dim cosine ≈ 4 MB) were
+        # coalesced to 1-4 partitions and ran serially (measured:
+        # embedding_dedup verify = one 3 s task). 64k keeps such
+        # stages wide locally; production inputs are orders larger,
+        # where the 1 MB default never binds on real data anyway.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
+            "SPARK_AQE_MIN_PARTITION_SIZE", "64k"
+        ),
+    }
+    # Shuffle files on the fastest local storage (the shuffle is
+    # disk-backed by design). Production clusters point
+    # spark.local.dir / SPARK_LOCAL_DIRS at striped NVMe; on a VM whose
+    # only fast device is RAM-backed tmpfs, ext4 on the virtio disk
+    # charged ~4 s of shuffle-file write time to single MB-scale
+    # exchanges (A/B/A: simhash_pairs 3.4→2.4 s).
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir is None and os.path.isdir("/dev/shm"):
+        local_dir = "/dev/shm/spark-local"
+    if local_dir:
+        conf["spark.local.dir"] = local_dir
+    return conf
 
 
 def get_spark(
@@ -46,50 +101,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if master.startswith("local"):
-        # local files are small: keep scan splits ≤16 MB so map-side
-        # parallelism matches the core count (on a real cluster the
-        # default 128 MB is right — there the files are many and large)
-        builder = builder.config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        # r7 (guide §2.2/§6): the 16 MB cap alone still left the sf0.1
-        # transcript scan at 6 map tasks on a 32-core box (measured:
-        # the logs-envelope map stage burned 12 s of CPU across 6 tasks
-        # = 2 s wall with 26 cores idle). Scale-adaptively derive split
-        # size from input-size/parallelism instead of a constant:
-        # minPartitionNum floors scan parallelism at 2× the core count
-        # and openCostInBytes must drop below the default 4 MB or it
-        # re-floors every split at 4 MB. Cluster runs (master != local)
-        # keep the defaults — there files are many and large and the
-        # 128 MB split is right.
-        parallelism = int(master[6:-1]) if master[6:-1].isdigit() else int(cpus)
-        builder = builder.config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_MIN_PARTITION_NUM", str(2 * parallelism)),
-        ).config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_OPEN_COST_BYTES", str(1024 * 1024)),
-        ).config(
-            # AQE coalescing is byte-based; CPU-dense stages over narrow
-            # rows (134k candidate pairs × 64-dim cosine ≈ 4 MB) were
-            # coalesced to 1-4 partitions and ran serially (measured:
-            # embedding_dedup verify = one 3 s task). 64k keeps such
-            # stages wide locally; production inputs are orders larger,
-            # where the 1 MB default never binds on real data anyway.
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
-        # Shuffle files on the fastest local storage (guide §2.1: the
-        # shuffle is disk-backed by design). Production clusters point
-        # spark.local.dir / SPARK_LOCAL_DIRS at striped NVMe; this
-        # sandbox's only fast device is RAM-backed tmpfs — ext4-on-vda
-        # charged ~4 s of shuffle-file write time to single MB-scale
-        # exchanges (A/B/A: simhash_pairs 3.4→2.4 s). Local-mode only;
-        # cluster deployments keep their provisioned local dirs.
-        local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-        if local_dir is None and os.path.isdir("/dev/shm"):
-            local_dir = "/dev/shm/spark-local"
-        if local_dir:
-            builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**local_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

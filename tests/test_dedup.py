@@ -301,8 +301,8 @@ def test_incremental_dedup_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    store = dedup.minhash_store(corpus)
-    kept = {r["doc_id"] for r in dedup.incremental_dedup_keep_ids(newb, store).collect()}
+    store = dedup.store_frames(dedup.minhash_store(corpus))
+    kept = {r["doc_id"] for r in dedup.incremental_dedup_keep_ids(newb, *store).collect()}
     assert 100 not in kept  # exact corpus dup
     assert 101 in kept and 102 not in kept  # min id survives the batch
     assert 103 not in kept  # near-dup of corpus content, caught by signatures
@@ -325,8 +325,8 @@ def test_incremental_dedup_never_rescans_corpus_text(spark, tmp_path):
     )
     path = str(tmp_path / "store")
     dedup.minhash_store(corpus).write.parquet(path)
-    store = spark.read.parquet(path)  # no lineage back to corpus text
-    kept = {r["doc_id"] for r in dedup.incremental_dedup_keep_ids(newb, store).collect()}
+    store = dedup.store_frames(spark.read.parquet(path))  # no lineage back to corpus text
+    kept = {r["doc_id"] for r in dedup.incremental_dedup_keep_ids(newb, *store).collect()}
     assert kept == {200}
 
 
@@ -428,23 +428,31 @@ def test_neardup_components_transitive_closure(spark):
 
 
 def test_neardup_components_star_matches_propagation(spark):
-    """Two-phase star must agree with min-label propagation on a mixed
-    graph (chain + pair + isolates + a triangle joined to the chain)."""
+    """Two-phase star must agree with the oracle's min-label
+    propagation (a recursive CTE run in DuckDB) on a mixed graph
+    (chain + pair + isolates + a triangle joined to the chain)."""
+    import duckdb
+
+    edges = [(0, 1), (1, 2), (2, 3), (5, 6), (3, 10), (10, 11), (11, 3)]
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(12)], "doc_id long, text string"
     )
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (5, 6), (3, 10), (10, 11), (11, 3)],
-        "id_a long, id_b long",
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    con = duckdb.connect()
+    con.sql(
+        "CREATE TABLE documents AS SELECT range AS doc_id FROM range(12)"
     )
-    want = {
-        r["doc_id"]: r["component_id"]
-        for r in dedup.neardup_components(docs, pairs).collect()
-    }
+    con.sql("CREATE TABLE mixed_pairs (id_a BIGINT, id_b BIGINT)")
+    con.executemany("INSERT INTO mixed_pairs VALUES (?, ?)", edges)
+    want = dict(
+        con.sql(
+            dedup.oracle_neardup_components("SELECT * FROM mixed_pairs")
+        ).fetchall()
+    )
     stats: dict = {}
     got = {
         r["doc_id"]: r["component_id"]
-        for r in dedup.neardup_components_star(
+        for r in dedup.neardup_components(
             docs, pairs, stats_handle=stats
         ).collect()
     }
@@ -469,28 +477,25 @@ def test_components_persist_handle_frees_checkpoints(spark):
     def rdd_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    for fn in (dedup.neardup_components, dedup.neardup_components_star):
-        before = rdd_ids()
-        handle: list = []
-        labels = fn(docs, pairs, persist_handle=handle)
-        rows = labels.collect()
-        assert len(rows) == 8
-        assert handle
-        for frame in handle:
-            frame.unpersist(True)
-        # set-based, not count-based: unrelated stale RDDs from earlier
-        # tests may get ContextCleaner-reclaimed while this test runs
-        leaked = rdd_ids() - before
-        assert not leaked, (
-            f"{fn.__name__} leaked persistent RDD ids {sorted(leaked)} "
-            "past the handle cleanup"
-        )
+    before = rdd_ids()
+    handle: list = []
+    labels = dedup.neardup_components(docs, pairs, persist_handle=handle)
+    rows = labels.collect()
+    assert len(rows) == 8
+    assert handle
+    for frame in handle:
+        frame.unpersist(True)
+    # set-based, not count-based: unrelated stale RDDs from earlier
+    # tests may get ContextCleaner-reclaimed while this test runs
+    leaked = rdd_ids() - before
+    assert not leaked, (
+        f"leaked persistent RDD ids {sorted(leaked)} past the handle cleanup"
+    )
 
 
 def test_neardup_components_star_deep_chain(spark):
-    """A 64-node path (diameter 63) exceeds propagation's default
-    20-round bound but the star variant converges in O(log n) rounds —
-    the documented reason the variant exists."""
+    """A 64-node path (diameter 63) converges in O(log n) rounds — the
+    depth-independence the two-phase star algorithm exists for."""
     n = 64
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(n)], "doc_id long, text string"
@@ -498,12 +503,10 @@ def test_neardup_components_star_deep_chain(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_components(docs, chain)
     stats: dict = {}
     comp = {
         r["doc_id"]: r["component_id"]
-        for r in dedup.neardup_components_star(
+        for r in dedup.neardup_components(
             docs, chain, stats_handle=stats
         ).collect()
     }
@@ -519,4 +522,24 @@ def test_neardup_components_star_nonconvergence_is_loud(spark):
         [(i, i + 1) for i in range(39)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_components_star(docs, chain, max_iters=1)
+        dedup.neardup_components(docs, chain, max_iters=1)
+
+
+def test_neardup_components_nonconvergence_is_loud(spark):
+    """A chain the round budget cannot collapse must raise, not return
+    fragmented components — and the error path frees the edge
+    checkpoints no caller holds a handle to."""
+    docs = spark.createDataFrame(
+        [(i, f"d{i}") for i in range(6)], "doc_id long, text string"
+    )
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+    )
+
+    def rdd_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = rdd_ids()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.neardup_components(docs, chain, max_iters=1)
+    assert not rdd_ids() - before

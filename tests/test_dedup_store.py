@@ -1,10 +1,11 @@
 """Disk-backed incremental-dedup store (VERDICT r3 #5).
 
 write_minhash_store persists the dedup state as bucketed tables;
-incremental_dedup_keep_ids_bucketed must (a) return EXACTLY what the
-in-memory variant returns, and (b) never exchange the corpus side of
-the candidate join or the signature join — the whole point of paying
-the bucketed layout at write time.
+incremental_dedup_keep_ids fed from them must (a) return EXACTLY what
+it returns fed from the in-memory store_frames, and (b) never exchange
+the corpus side of the candidate join or the signature join — the
+whole point of paying the bucketed layout at write time. The in-memory
+store's three frames must all read one materialisation.
 """
 
 from __future__ import annotations
@@ -36,24 +37,48 @@ def store(spark, sf_dir):
 
 
 def test_bucketed_store_matches_in_memory(spark, store):
-    """The production read path is result-identical to the in-memory
-    one (same exact anti-join, same combined-bucket cap, same
-    signature verification)."""
+    """The two store sources give one function identical answers (same
+    exact anti-join, same combined-bucket cap, same signature
+    verification)."""
     corpus = store.filter(F.col("doc_id") % 5 != 0)
     new = store.filter(F.col("doc_id") % 5 == 0)
     mem = {
         r["doc_id"]
         for r in dedup.incremental_dedup_keep_ids(
-            new, dedup.minhash_store(corpus)
+            new, *dedup.store_frames(dedup.minhash_store(corpus))
         ).collect()
     }
     disk = {
         r["doc_id"]
-        for r in dedup.incremental_dedup_keep_ids_bucketed(
-            spark, new, STORE
+        for r in dedup.incremental_dedup_keep_ids(
+            new, *dedup.read_minhash_store(spark, STORE)
         ).collect()
     }
     assert disk == mem and len(disk) > 0
+
+
+def test_in_memory_store_frames_read_one_materialisation(spark, store):
+    """Plan pin: docs, keys and counts of the in-memory store all read
+    the SAME filled cache — no leaf of their plans scans the corpus
+    files (so none re-hashes its text), and the cache is materialised
+    before any consumer runs, so none can race its fill."""
+    corpus = store.filter(F.col("doc_id") % 5 != 0)
+    handle: list = []
+    frames = dedup.store_frames(dedup.minhash_store(corpus), handle)
+    try:
+        buffers = set()
+        for frame in frames:
+            leaves = frame._jdf.queryExecution().withCachedData().collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                assert leaf.nodeName() == "InMemoryRelation", leaf.toString()
+                builder = leaf.cacheBuilder()
+                assert builder.isCachedColumnBuffersLoaded()
+                buffers.add(builder.cachedColumnBuffers().id())
+        assert len(buffers) == 1
+    finally:
+        for frame in handle:
+            frame.unpersist(True)
 
 
 def _scan_exchange_violations(plan: str, table: str) -> list[str]:
@@ -94,7 +119,9 @@ def test_corpus_side_joins_are_exchange_free(spark, store):
     {store}_docs scan (signature join) may be re-shuffled — they carry
     their bucketing into the joins."""
     new = store.filter(F.col("doc_id") % 5 == 0)
-    out = dedup.incremental_dedup_keep_ids_bucketed(spark, new, STORE)
+    out = dedup.incremental_dedup_keep_ids(
+        new, *dedup.read_minhash_store(spark, STORE)
+    )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert not _scan_exchange_violations(plan, f"{STORE}_keys")
     assert not _scan_exchange_violations(plan, f"{STORE}_docs")

@@ -391,23 +391,6 @@ def test_span_batch_foreign_ids_and_null_ts():
         W._encode_span_batch(pdf2)
 
 
-def test_neardup_components_nonconvergence_is_loud(spark):
-    """A chain deeper than max_iters must raise, not return fragmented
-    components."""
-    import pytest
-
-    from opentelemetry_collector_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(6)], "doc_id long, text string"
-    )
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_components(docs, chain, max_iters=2)
-
-
 def test_encode_huge_value_next_to_null_is_exact(spark):
     """A mixed NULL/huge-value Arrow batch must keep sfixed64 values
     bit-exact: without the Spark-side filled/flag pre-split, Arrow→

@@ -342,6 +342,12 @@ def ensure_media(n: int = 96, seed: int = SEED) -> str:
     return str(path)
 
 
+# Spark schemas of the dimension tables ensure_dims writes (readers
+# declare them, so a read runs no footer-inference job)
+ROLE_DIM_DDL = "role string, role_kind string, is_human boolean"
+TOOL_DIM_DDL = "tool string, tool_family string, sink_hint string"
+
+
 def ensure_dims() -> tuple[str, str]:
     """Enrichment lookup tables (FIXTURES.md §2, broadcast-join side)."""
     rp, tp = role_dim_path(), tool_dim_path()
@@ -388,6 +394,27 @@ def ensure_dims() -> tuple[str, str]:
 # ------------------------------------------------------------- profiles
 
 
+# Spark schemas of the tables ensure_profiles writes (readers declare
+# them, so a read runs no footer-inference job)
+PROFILE_DDL = {
+    "functions": "function_id int, name string, filename string",
+    "locations": "location_id int, function_id int, line int, mapping_id int",
+    "stacks": "stack_id int, location_ids array<int>",
+    "samples": (
+        "sample_id bigint, profile_id int, stack_id int, value bigint, "
+        "ts timestamp_ntz, link_id int, attribute_ids array<int>"
+    ),
+    "links": "link_id int, trace_id string, span_id string",
+    "attributes": (
+        "attr_id int, key string, str_value string, int_value bigint, unit string"
+    ),
+    "mappings": (
+        "mapping_id int, filename string, memory_start bigint, "
+        "memory_limit bigint, file_offset bigint"
+    ),
+}
+
+
 def profiles_dir() -> Path:
     return FIXTURE_ROOT / f"profiles_v{PROFILES_GEN_VERSION}"
 
@@ -413,18 +440,7 @@ def ensure_profiles(
     value is nanoseconds of CPU attributed to the sample. Written once;
     Spark and the DuckDB oracle read the same bytes."""
     d = profiles_dir()
-    paths = {
-        t: d / f"profile_{t}.parquet"
-        for t in (
-            "functions",
-            "locations",
-            "stacks",
-            "samples",
-            "links",
-            "attributes",
-            "mappings",
-        )
-    }
+    paths = {t: d / f"profile_{t}.parquet" for t in PROFILE_DDL}
     if all(p.exists() for p in paths.values()):
         return {t: str(p) for t, p in paths.items()}
     d.mkdir(parents=True, exist_ok=True)

@@ -34,11 +34,25 @@ from pyspark.sql.types import (
 
 # One pattern, locked semantics (SURVEY.md §7: byte-stable parsing).
 # Kept to the common regex subset so Java (Spark), RE2 (DuckDB) and
-# Python (pandas) agree exactly.
+# Python (pandas) agree exactly:
+# - the end anchor is end-of-input `\z`: `$` also matched before a final
+#   line terminator in Java (\n, \r\n, ...) and before a final \n in
+#   Python, but nowhere in RE2;
+# - \S is spelled out: RE2's \s leaves out \v (\x0B), Java's and
+#   Python's include it.
+_TOKEN = r"([^\t\n\x0B\f\r ]+)"
 PARSE_PATTERN = (
     r"^\[(DEBUG|INFO|WARN|ERROR)\] svc=(\w+) latency_ms=(\d+) "
-    r"req_id=(\S+) msg=(\S+)$"
+    rf"req_id={_TOKEN} msg={_TOKEN}\z"
 )
+# Python 3.11 has no `\z`; its `\Z` is the same end-of-input anchor
+PY_PARSE_PATTERN = PARSE_PATTERN.replace(r"\z", r"\Z")
+
+# One regex evaluation per row: a parseable text becomes its five groups
+# joined by spaces (no group can hold one); any other text falls through
+# to the catch-all branch, whose unset groups give five empty fields.
+_SPLIT_PATTERN = rf"(?:{PARSE_PATTERN})|^[\s\S]*"
+_SPLIT_REPLACEMENT = "$1 $2 $3 $4 $5"
 
 PARSED_STRUCT = StructType(
     [
@@ -58,18 +72,15 @@ def _nonempty(c: Column) -> Column:
 
 
 def parsed_columns_native(text: Column) -> dict[str, Column]:
-    """Catalyst-native extraction; '' (regexp_extract's no-match) → null."""
-    lvl = F.regexp_extract(text, PARSE_PATTERN, 1)
-    svc = F.regexp_extract(text, PARSE_PATTERN, 2)
-    lat = F.regexp_extract(text, PARSE_PATTERN, 3)
-    req = F.regexp_extract(text, PARSE_PATTERN, 4)
-    msg = F.regexp_extract(text, PARSE_PATTERN, 5)
+    """Catalyst-native extraction; an empty field (no match) → null."""
+    parts = F.split(F.regexp_replace(text, _SPLIT_PATTERN, _SPLIT_REPLACEMENT), " ")
+    lvl, svc, lat, req, msg = (_nonempty(parts[i]) for i in range(5))
     return {
-        "level": _nonempty(lvl),
-        "svc": _nonempty(svc),
-        "latency_ms": _nonempty(lat).cast("long"),
-        "req_id": _nonempty(req),
-        "msg": _nonempty(msg),
+        "level": lvl,
+        "svc": svc,
+        "latency_ms": lat.cast("long"),
+        "req_id": req,
+        "msg": msg,
     }
 
 
@@ -88,7 +99,7 @@ def _parse_udf(text: pd.Series) -> pd.DataFrame:
     # (native path) and RE2 (DuckDB oracle) treat them ASCII-only — the
     # locked-semantics contract requires all three engines to agree on
     # non-ASCII payloads (e.g. 'svc=café' must NOT parse).
-    out = text.str.extract(re.compile(PARSE_PATTERN, re.ASCII))
+    out = text.str.extract(re.compile(PY_PARSE_PATTERN, re.ASCII))
     out.columns = PARSED_COLS
     out["latency_ms"] = pd.to_numeric(out["latency_ms"], errors="coerce").astype(
         "Int64"

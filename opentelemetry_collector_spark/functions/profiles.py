@@ -33,7 +33,10 @@ from opentelemetry_collector_spark import fixtures
 
 def read_profile_tables(spark: SparkSession) -> dict[str, DataFrame]:
     paths = fixtures.ensure_profiles()
-    return {name: spark.read.parquet(p) for name, p in paths.items()}
+    return {
+        name: spark.read.schema(fixtures.PROFILE_DDL[name]).parquet(p)
+        for name, p in paths.items()
+    }
 
 
 def hot_functions(

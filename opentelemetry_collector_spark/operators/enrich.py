@@ -22,7 +22,10 @@ from opentelemetry_collector_spark import fixtures
 
 def load_dims(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     role_path, tool_path = fixtures.ensure_dims()
-    return spark.read.parquet(role_path), spark.read.parquet(tool_path)
+    return (
+        spark.read.schema(fixtures.ROLE_DIM_DDL).parquet(role_path),
+        spark.read.schema(fixtures.TOOL_DIM_DDL).parquet(tool_path),
+    )
 
 
 def enrich(

@@ -7,9 +7,10 @@ that subset) + fanoutconsumer (internal/fanoutconsumer/logs.go:21-78).
 Spark-first shape: routing is a single CASE expression producing a
 ``sink`` column — a pure function of row columns only (never of time,
 partition id, or randomness), so replays under retry are deterministic
-(SURVEY.md §7). Fan-out writes evaluate the routed frame ONCE
-(persist) and then write per-sink filtered slices; DataFrame
-immutability replaces the reference's clone-on-mutate logic.
+(SURVEY.md §7). Fan-out evaluates the routed frame ONCE (persist) and
+then writes every sink in one partitioned job (plans/runner) or hands
+out per-sink filtered slices (fan_out); DataFrame immutability
+replaces the reference's clone-on-mutate logic.
 
 First-match-wins rule order mirrors the router's ordered pipeline
 selection. Invalid (unparseable) rows short-circuit to the quarantine

@@ -3,9 +3,12 @@ progress, and obsreport metrics.
 
 This is the Collector.Run analog (otelcol/collector.go:415 →
 service/internal/graph.StartAll): evaluate the routed frame once
-(persist — the fanoutconsumer obligation), then execute one
-unit-of-work per sink under the lineage manifest so a killed run
-resumes without duplicating routed rows, then write the metrics table.
+(persist — the fanoutconsumer obligation), then write every sink not
+yet committed in ONE Spark job (partitionBy sink, dynamic partition
+overwrite) while the lineage manifest keeps one unit — one
+dispatched → committed record — per sink, so a killed run resumes by
+rewriting only its incomplete sinks and never duplicates routed rows;
+then write the aggregate, metrics and status tables.
 """
 
 from __future__ import annotations
@@ -40,10 +43,11 @@ def run_pipeline(
     """Execute parse→enrich→route, fan out to per-sink tables, write
     metrics + aggregate. Returns {sink: output_path}.
 
-    single_pass=True uses write_fanout_single_pass (partitionBy sink,
-    one scan, zero extra shuffles — the 100 TB default) with the whole
-    fan-out as one lineage unit; False keeps per-sink units
-    (persistent-queue-grade resume granularity).
+    single_pass=False (default): one lineage unit per sink
+    (persistent-queue-grade resume granularity); the first incomplete
+    unit writes every incomplete sink in one write_sink job and each
+    unit then gets its own commit record. single_pass=True uses
+    write_fanout_single_pass with the whole fan-out as one lineage unit.
 
     time_partition='hour'|'day' lays each per-sink table out in
     event-time partitions (write_sink_time_partitioned — the Iceberg
@@ -90,30 +94,43 @@ def run_pipeline(
                 execute_all,
                 crash_after="fanout" if crash_after is not None else None,
             )
+        elif time_partition:
+            paths = {s: writers.time_sink_path(out_dir, run_id, s) for s in sinks}
+
+            def execute_timed(sink: str) -> None:
+                status_mod.run_reported(
+                    reporter,
+                    f"exporter/{sink}",
+                    lambda: writers.write_sink_time_partitioned(
+                        routed.filter(F.col("sink") == sink), out_dir, run_id, sink,
+                        granularity=time_partition,
+                        rows_per_file=rows_per_file,
+                    ),
+                )
+
+            checkpoint.run_with_resume(
+                manifest, sinks, execute_timed, crash_after=crash_after
+            )
         else:
-            if time_partition:
-                paths = {
-                    s: writers.time_sink_path(out_dir, run_id, s) for s in sinks
-                }
-            else:
-                paths = {s: writers.sink_path(out_dir, run_id, s) for s in sinks}
+            paths = {s: writers.sink_path(out_dir, run_id, s) for s in sinks}
+            written: set[str] = set()
 
             def execute(sink: str) -> None:
-                def _write() -> None:
-                    part = routed.filter(F.col("sink") == sink)
-                    if time_partition:
-                        writers.write_sink_time_partitioned(
-                            part, out_dir, run_id, sink,
-                            granularity=time_partition,
-                            rows_per_file=rows_per_file,
-                        )
-                    else:
-                        writers.write_sink(
-                            part, out_dir, run_id, sink,
-                            rows_per_file=rows_per_file,
-                        )
-
-                status_mod.run_reported(reporter, f"exporter/{sink}", _write)
+                # the first incomplete unit writes every incomplete sink
+                # in one job; the units after it only get their commit
+                # record, so crash_after=<sink> still stops between that
+                # sink's write and its commit
+                if sink in written:
+                    return
+                todo = [s for s in sinks if manifest.state(s) != checkpoint.COMMITTED]
+                status_mod.run_reported(
+                    reporter,
+                    [f"exporter/{s}" for s in todo],
+                    lambda: writers.write_sink(
+                        routed, out_dir, run_id, todo, rows_per_file=rows_per_file
+                    ),
+                )
+                written.update(todo)
 
             checkpoint.run_with_resume(manifest, sinks, execute, crash_after=crash_after)
 
@@ -147,9 +164,11 @@ def read_sink(
     sink: str,
     time_partitioned: bool = False,
 ) -> DataFrame:
+    """One sink's table, with its ``sink`` column: a per-sink write keeps
+    the name in the sink=<S> directory, not in the data files."""
     path = (
         writers.time_sink_path(out_dir, run_id, sink)
         if time_partitioned
         else writers.sink_path(out_dir, run_id, sink)
     )
-    return spark.read.parquet(path)
+    return spark.read.parquet(path).withColumn("sink", F.lit(sink))

@@ -1,10 +1,11 @@
 """Sinks (the exporter analog).
 
-- ``write_sink``: the otlpexporter analog — append/overwrite a table per
-  sink (exporter/otlpexporter/otlp.go:133-151). Writes are **idempotent
-  per (run_id, sink)**: a deterministic output path written with
-  overwrite mode, so a replayed partition/sink replaces rather than
-  duplicates — the Spark-native replace-where. Combined with the
+- ``write_sink``: the otlpexporter analog — overwrite a table per sink
+  (exporter/otlpexporter/otlp.go:133-151), one sink or many in one
+  job. Writes are **idempotent per (run_id, sink)**: a deterministic
+  output directory replaced by a dynamic partition overwrite, so a
+  replayed sink replaces rather than duplicates — the Spark-native
+  replace-where. Combined with the
   lineage manifest (state/checkpoint.py) this reproduces the persistent
   queue's at-least-once-replay + exactly-once-effect contract
   (exporter/exporterhelper/internal/queue/persistent_queue.go:50-73).
@@ -15,8 +16,8 @@
   internal/retry_sender.go:71-152): exponential backoff around the
   commit, permanent errors short-circuit.
 
-Scale note: per-sink writes repartition on the sink's shard keys and
-cap records per file (batch.shape_for_write) — the batchprocessor's
+Scale note: sink writes repartition on the shard key (conv_id) and cap
+records per file (batch.shape_for_write) — the batchprocessor's
 send_batch_max_size split expressed as physical file shaping. On a
 real cluster the same call sites target Iceberg
 (write.format("iceberg"), replaceWhere) — parquet-dir fallback here.
@@ -25,7 +26,10 @@ real cluster the same call sites target Iceberg
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -97,30 +101,62 @@ def single_pass_sink_path(base_dir: str, run_id: str, sink: str) -> str:
     return str(Path(base_dir) / f"run_id={run_id}" / f"_sink_part={sink}")
 
 
+# characters partitionBy escapes in a directory name (Spark's
+# ExternalCatalogUtils.escapePathName): a sink named with one would land
+# in a directory other than sink_path
+_ESCAPED_IN_PATH = re.compile(r'[\x00-\x1f"#%\'*/:=?\\\x7f{\[\]^]')
+
+
 def write_sink(
     df: DataFrame,
     base_dir: str,
     run_id: str,
-    sink: str,
+    sink: str | Sequence[str],
     rows_per_file: int = batch_mod.DEFAULT_SEND_BATCH_SIZE,
     retry: RetryConfig | None = None,
-) -> str:
-    """Idempotent per-(run_id, sink) write: overwrite a deterministic path.
+) -> str | dict[str, str]:
+    """Idempotent per-(run_id, sink) write of one sink or of many, in ONE
+    Spark job — the fanoutconsumer hands one batch to every exporter in
+    one ConsumeLogs call (internal/fanoutconsumer/logs.go:49-78).
 
-    Replaying the same logical write produces byte-equivalent state
-    instead of duplicates (replace-where semantics on the parquet
-    fallback; on Iceberg this is an overwritePartitions commit).
+    ``sink`` is one name (every row of ``df`` belongs to it; returns its
+    path) or a list of names (``df`` carries a ``sink`` column and only
+    the listed sinks' rows are written; returns {sink: path}). The rows
+    are shaped once on conv_id and written partitionBy("sink") with
+    dynamic partition overwrite into run_id=<R>/: each listed sink's
+    sink=<S> directory is replaced and nothing else under the run is
+    touched, so a replay replaces only the sinks it rewrites (on Iceberg
+    an overwritePartitions commit). A listed sink that receives no rows
+    still ends as a readable empty table. The sink name lives in the
+    directory, not in the data files (runner.read_sink adds it back).
     """
-    path = sink_path(base_dir, run_id, sink)
-    shaped, opts = batch_mod.shape_for_write(df, rows_per_file, shard_keys=("conv_id",))
+    sinks = [sink] if isinstance(sink, str) else list(sink)
+    bad = [s for s in sinks if not s or _ESCAPED_IN_PATH.search(s)]
+    if bad:
+        raise ValueError(f"sink names must be plain path segments: {bad!r}")
+    rows = (
+        df.withColumn("sink", F.lit(sink))
+        if isinstance(sink, str)
+        else df.filter(F.col("sink").isin(sinks))
+    )
+    paths = {s: sink_path(base_dir, run_id, s) for s in sinks}
+    shaped, opts = batch_mod.shape_for_write(rows, rows_per_file, shard_keys=("conv_id",))
 
     def _commit() -> None:
-        w = shaped.write.mode("overwrite")
+        # the dynamic overwrite replaces only the sinks that receive
+        # rows; clearing every listed sink first leaves an empty one
+        # absent, so it gets its empty table below instead of stale rows
+        for path in paths.values():
+            shutil.rmtree(path, ignore_errors=True)
+        w = shaped.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         w = batch_mod.apply_write_options(w, opts)
-        w.parquet(path)
+        w.partitionBy("sink").parquet(str(Path(base_dir) / f"run_id={run_id}"))
+        for path in paths.values():
+            if not os.path.exists(path):
+                shaped.drop("sink").limit(0).write.parquet(path)
 
     retry_commit(_commit, retry)
-    return path
+    return paths[sink] if isinstance(sink, str) else paths
 
 
 def rejected_path(base_dir: str, run_id: str, sink: str) -> str:
@@ -182,16 +218,15 @@ def write_fanout_single_pass(
     run_id: str,
     rows_per_file: int = batch_mod.DEFAULT_SEND_BATCH_SIZE,
 ) -> str:
-    """One-pass fan-out: write.partitionBy('sink') — every sink's table
-    materializes in a single scan of the routed frame with ZERO extra
-    shuffles (vs one repartition per sink in the per-unit mode).
+    """One-pass fan-out: write.partitionBy('_sink_part') — every sink's
+    table materializes in a single job over the routed frame with no
+    shuffle, and the whole fan-out is ONE lineage unit.
 
-    Tradeoff vs write_sink units: resume granularity is the whole
-    fan-out (one lineage unit), not per sink. At 100 TB this is the
-    default — the scan dominates and re-running one idempotent
-    overwrite of the whole epoch is cheaper than 5 extra shuffles on
-    every healthy run. The per-sink mode remains for fine-grained
-    resume (persistent-queue parity).
+    The per-sink mode (write_sink over the list of incomplete sinks)
+    also writes every sink in one write, shaped once on conv_id, and
+    keeps a commit record per sink. This mode differs only by skipping
+    that shuffle (one Spark job fewer) and by replaying the whole
+    fan-out after a crash.
     """
     path = str(Path(base_dir) / f"run_id={run_id}")
 
@@ -226,9 +261,6 @@ def compact_sink(
 
     Returns (files_before, files_after).
     """
-    import shutil
-    from pathlib import Path as P
-
     shadow = path.rstrip("/") + "__compact"
     old = path.rstrip("/") + "__old"
     # crash recovery: a previous run may have died between its two
@@ -242,7 +274,7 @@ def compact_sink(
 
     df = spark.read.parquet(path)
     n = df.count()
-    files_before = len(list(P(path).rglob("*.parquet")))
+    files_before = len(list(Path(path).rglob("*.parquet")))
     n_files = max(1, -(-n // target_rows_per_file))
     (
         df.repartition(n_files)
@@ -256,7 +288,7 @@ def compact_sink(
     os.rename(path, old)
     os.rename(shadow, path)
     shutil.rmtree(old)
-    files_after = len(list(P(path).rglob("*.parquet")))
+    files_after = len(list(Path(path).rglob("*.parquet")))
     return files_before, files_after
 
 

@@ -17,12 +17,20 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from opentelemetry_collector_spark import fixtures
 
 DRIVER_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+# The transcript fixture's own arrow schema, as Spark reads it: a
+# timestamp without a zone is timestamp_ntz. Declaring it spares every
+# scan the footer-inference job.
+TRANSCRIPTS_SCHEMA = from_arrow_schema(
+    fixtures.TRANSCRIPT_SCHEMA, prefer_timestamp_ntz=True
+)
 
 
 def read_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,7 +40,9 @@ def read_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans it. Column pruning and predicate pushdown flow into the scan
     because this returns a plain declarative reader (no collect, no rdd).
     """
-    return spark.read.parquet(fixtures.ensure_transcripts(sf_dir))
+    return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+        fixtures.ensure_transcripts(sf_dir)
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -43,7 +53,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def nop_source(spark: SparkSession) -> DataFrame:
     """nopreceiver analog (receiver/nopreceiver/nop_receiver.go):
     an empty transcript-schema frame for wiring tests."""
-    return spark.createDataFrame([], schema=transcript_ddl())
+    return spark.createDataFrame([], schema=TRANSCRIPTS_SCHEMA)
 
 
 def transcript_ddl() -> str:

@@ -20,12 +20,24 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from opentelemetry_collector_spark.operators.route import QUARANTINE_SINK
 
 METRICS_SCHEMA = "stage string, metric string, value long"
+
+
+def driver_rows_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few driver-side rows as a DataFrame, handed to the JVM as one
+    Arrow table: createDataFrame(list) pickles the rows through a
+    Python worker per partition to write a 15-row table."""
+    names = StructType.fromDDL(schema).names
+    columns = list(zip(*rows)) or [()] * len(names)
+    table = pa.table({n: list(c) for n, c in zip(names, columns)})
+    return spark.createDataFrame(table, schema=schema)
 
 
 @dataclass
@@ -36,7 +48,7 @@ class StageMetrics:
         self.rows.append((stage, metric, int(value)))
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.rows, schema=METRICS_SCHEMA)
+        return driver_rows_frame(spark, self.rows, METRICS_SCHEMA)
 
 
 def collect_pipeline_metrics(routed: DataFrame) -> StageMetrics:

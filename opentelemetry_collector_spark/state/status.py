@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opentelemetry_collector_spark.state.metrics import driver_rows_frame
+
 STARTING = "StatusStarting"
 OK = "StatusOK"
 RECOVERABLE_ERROR = "StatusRecoverableError"
@@ -86,27 +88,34 @@ class StatusReporter:
         return OK
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.events, schema=STATUS_SCHEMA)
+        return driver_rows_frame(spark, self.events, STATUS_SCHEMA)
 
 
-def run_reported(reporter: StatusReporter, component: str, fn):
-    """Run one component unit under lifecycle reporting: Starting →
-    fn() → OK; PermanentError/other exceptions are reported and
-    re-raised (graph.go:442-450 semantics — a component that reports
-    its own status during Start is not overwritten; here fn owns the
-    work and the reporter owns the envelope)."""
+def run_reported(reporter: StatusReporter, component: str | list[str], fn):
+    """Run one unit of work for one component, or for several at once
+    (one fan-out job serving many exporters), under lifecycle
+    reporting: Starting → fn() → OK; PermanentError/other exceptions are
+    reported and re-raised (graph.go:442-450 semantics — a component
+    that reports its own status during Start is not overwritten; here
+    fn owns the work and the reporter owns the envelope)."""
     from opentelemetry_collector_spark.sinks.writers import PermanentError
 
-    reporter.report(component, STARTING)
+    components = [component] if isinstance(component, str) else component
+
+    def report_all(status: str, error: str | None = None) -> None:
+        for c in components:
+            reporter.report(c, status, error)
+
+    report_all(STARTING)
     try:
         out = fn()
     except PermanentError as e:
-        reporter.report(component, PERMANENT_ERROR, str(e))
+        report_all(PERMANENT_ERROR, str(e))
         raise
     except Exception as e:  # noqa: BLE001 — retryable/unknown
-        reporter.report(component, RECOVERABLE_ERROR, str(e))
+        report_all(RECOVERABLE_ERROR, str(e))
         raise
-    reporter.report(component, OK)
+    report_all(OK)
     return out
 
 

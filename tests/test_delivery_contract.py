@@ -134,3 +134,113 @@ def test_run_pipeline_time_partitioned(spark, sf_dir, tmp_path):
             for p in Path(timed[sink]).iterdir()
             if p.is_dir()
         )
+
+
+# ------------------------------------------- one-job fan-out (per-sink mode)
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, sf_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("fanout_clean"))
+    paths = runner.run_pipeline(spark, sf_dir, out, run_id="r1")
+    return out, paths
+
+
+@pytest.fixture(scope="module")
+def clean_ids(spark, clean_run):
+    return _collect_ids(spark, clean_run[0], "r1")
+
+
+def _part_files(out_dir, run_id, sink):
+    from pathlib import Path
+
+    from opentelemetry_collector_spark.sinks import writers
+
+    return sorted(p.name for p in Path(writers.sink_path(out_dir, run_id, sink)).iterdir())
+
+
+@pytest.mark.parametrize("crash_ix", range(5))
+def test_crash_after_each_sink_resume_equals_clean(spark, sf_dir, tmp_path, clean_ids, crash_ix):
+    """All sinks are written by one job before the first commit record;
+    a crash after any sink's write leaves the later units incomplete,
+    and the resume rewrites exactly those, leaving committed sinks'
+    files untouched."""
+    out = str(tmp_path / "crash")
+    sinks = route.all_sinks()
+    with pytest.raises(checkpoint.SimulatedCrash):
+        runner.run_pipeline(spark, sf_dir, out, run_id="r1", crash_after=sinks[crash_ix])
+    manifest = checkpoint.LineageManifest(f"{out}/_checkpoint", "r1")
+    assert manifest.committed() == sorted(sinks[:crash_ix])
+    assert manifest.incomplete() == sorted(sinks[crash_ix:])
+    kept = {s: _part_files(out, "r1", s) for s in sinks[:crash_ix]}
+
+    runner.run_pipeline(spark, sf_dir, out, run_id="r1")
+    manifest = checkpoint.LineageManifest(f"{out}/_checkpoint", "r1")
+    assert manifest.committed() == sorted(sinks)
+    assert {s: _part_files(out, "r1", s) for s in kept} == kept
+    assert _collect_ids(spark, out, "r1") == clean_ids
+
+
+def test_zero_row_sink_is_a_readable_empty_table(spark, sf_dir, tmp_path):
+    never = route.Route("r_never", "1 = 0", "sink_never")
+    cfg = pipeline.PipelineConfig(routes=(*route.DEFAULT_ROUTES, never))
+    out = str(tmp_path / "empty")
+    paths = runner.run_pipeline(spark, sf_dir, out, run_id="r1", cfg=cfg)
+    assert "sink_never" in paths
+    empty = runner.read_sink(spark, out, "r1", "sink_never")
+    assert empty.count() == 0
+    assert empty.schema == runner.read_sink(spark, out, "r1", route.DEFAULT_SINK).schema
+
+
+def test_rerun_leaves_no_stale_rows(spark, sf_dir, tmp_path):
+    """One fan-out write over a finished run's output, with sink_py
+    routed away: every sink holds exactly the new rows (sink_py none),
+    and agg/, metrics/, status/ and _checkpoint/ stay as they were."""
+    from pathlib import Path
+
+    from opentelemetry_collector_spark.sinks import writers
+
+    out = str(tmp_path / "rerun")
+    runner.run_pipeline(spark, sf_dir, out, run_id="r1")
+    others = [Path(out, "run_id=r1", d) for d in ("agg", "metrics", "status")]
+    others.append(Path(out, "_checkpoint"))
+
+    def listing():
+        return {str(d): sorted((p.name, p.stat().st_mtime_ns) for p in d.iterdir()) for d in others}
+
+    before = listing()
+    routed = pipeline.routed_frame(spark, sf_dir).withColumn(
+        "sink",
+        F.when(F.col("sink") == "sink_py", F.lit(route.DEFAULT_SINK)).otherwise(F.col("sink")),
+    )
+    writers.write_sink(routed, out, "r1", route.all_sinks())
+    assert listing() == before
+    got = _collect_ids(spark, out, "r1")
+    assert got["sink_py"] == set()
+    for s in route.all_sinks():
+        want = routed.filter(F.col("sink") == s).select("conv_id", "turn_idx").collect()
+        assert got[s] == {(r["conv_id"], r["turn_idx"]) for r in want}, s
+
+
+def test_read_sink_returns_sink_column(spark, clean_run):
+    out, paths = clean_run
+    for s in paths:
+        df = runner.read_sink(spark, out, "r1", s)
+        assert {r["sink"] for r in df.select("sink").distinct().collect()} == {s}
+    # a reader of several sink directories gets the column from the paths
+    both = spark.read.option("basePath", out).parquet(*paths.values())
+    assert set(both.select("sink").distinct().toPandas()["sink"]) == set(paths)
+
+
+def test_run_pipeline_spark_job_budget(spark, sf_dir, tmp_path):
+    """One fan-out job for all sinks, no schema-inference jobs: the
+    whole per-sink-mode run fits in 12 Spark jobs (22 with a write job
+    per sink and inferred source schemas)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("run_pipeline_job_budget", "count the jobs of one run")
+    try:
+        runner.run_pipeline(spark, sf_dir, str(tmp_path / "jobs"), run_id="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run_pipeline_job_budget")
+    assert 0 < len(jobs) <= 12, len(jobs)

@@ -52,3 +52,37 @@ def test_ts_deterministic_no_wallclock():
     t = fixtures.generate_transcripts(100).to_pandas()
     assert (t["ts"] >= np.datetime64("2025-01-01")).all()
     assert (t["ts"] < np.datetime64("2025-01-03")).all()
+
+
+def test_declared_spark_schemas_equal_inferred(spark, sf_dir):
+    """Readers declare the fixture tables' Spark schemas so a scan runs
+    no footer-inference job; each declaration must equal what inference
+    reads from the file, so generator drift fails here, loudly."""
+    from pyspark.sql.types import StructType
+
+    from opentelemetry_collector_spark.sources import tables
+
+    declared = {
+        fixtures.ensure_transcripts(sf_dir): tables.TRANSCRIPTS_SCHEMA,
+        **dict(zip(fixtures.ensure_dims(), (
+            StructType.fromDDL(fixtures.ROLE_DIM_DDL),
+            StructType.fromDDL(fixtures.TOOL_DIM_DDL),
+        ))),
+        **{
+            path: StructType.fromDDL(fixtures.PROFILE_DDL[name])
+            for name, path in fixtures.ensure_profiles().items()
+        },
+    }
+    assert len(declared) == 10
+    for path, schema in declared.items():
+        assert spark.read.parquet(path).schema == schema, path
+    assert tables.TRANSCRIPTS_SCHEMA["ts"].dataType.simpleString() == "timestamp_ntz"
+
+
+def test_nop_source_types_like_a_real_receiver(spark, sf_dir):
+    """A pipeline with no receiver types every column, ts included, as
+    the transcript scan does."""
+    from opentelemetry_collector_spark.sources import tables
+
+    real = tables.read_transcripts(spark, sf_dir)
+    assert tables.nop_source(spark).schema == real.schema

@@ -210,3 +210,17 @@ def test_debug_sink_thereafter_without_initial_is_loud(spark):
     df = spark.createDataFrame([(1,)], "v int")
     with pytest.raises(ValueError, match="sampling_initial"):
         writers.debug_sink(df, verbosity="basic", sampling_thereafter=3)
+
+
+def test_write_sink_refuses_names_partitionby_would_escape(spark, tmp_path):
+    """A sink's rows land in the directory partitionBy names after it;
+    a name Spark escapes (a '/' in an 'otlp/primary'-style exporter id)
+    would put them somewhere other than sink_path, and its reader would
+    see an empty table."""
+    df = spark.range(3).withColumnRenamed("id", "conv_id")
+    for name in ("otlp/primary", "a=b", ""):
+        with pytest.raises(ValueError, match="plain path segments"):
+            writers.write_sink(df, str(tmp_path), "r1", name)
+    with pytest.raises(ValueError, match="plain path segments"):
+        writers.write_sink(df.withColumn("sink", F.lit("ok")), str(tmp_path), "r1", ["ok", "x:y"])
+    assert not (tmp_path / "run_id=r1").exists()
